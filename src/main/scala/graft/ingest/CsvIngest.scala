@@ -1,13 +1,17 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** CSV ingestion with the reference's three-layer schema handling
   * (SURVEY.md §1.5; reference main.py:136-178, 223-258):
   *
-  *  1. header-only probe (S1) — cheap, no data scan;
+  *  1. header-only probe (S1) — driver-side, no Spark job or scan;
   *  2. mandatory-column contract check (F2) — files missing any
   *     contract column are rejected (quarantine path);
   *  3. conform (P1/X1) — extra columns beyond the contract are folded
@@ -40,11 +44,19 @@ object CsvIngest {
     StructField("total_cost", Money),
     StructField("additional_column", StringType)))
 
-  /** S1 — header-only probe: one file-read of the first line, no
-    * full scan (main.py:139-141).
+  /** S1 — header probe (main.py:139-141): Spark's own CSV helpers read,
+    * parse and make safe the first non-blank line on the driver, equal to
+    * the header read's `columns` (CsvIngestSpec) with no Spark job.
     */
-  def probeColumns(spark: SparkSession, path: String): Seq[String] =
-    spark.read.option("header", "true").csv(path).columns.toSeq
+  def probeColumns(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"), conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    CSVUtils.readHeaderLine(new Path(path), opts, spark.sessionState.newHadoopConf())
+      .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+      .map(CSVUtils.makeSafeHeader(_, conf.caseSensitiveAnalysis, opts).toSeq)
+      .getOrElse(Nil)
+  }
 
   /** Contract check: Left(missing columns) if the file violates the
     * contract, Right(extra columns) otherwise (main.py:146-153).
@@ -64,60 +76,47 @@ object CsvIngest {
       checked.collect { case (p, Left(m)) => (p, m) })
   }
 
-  /** Conform one (validated) file to the 9-column contract, folding
-    * extra columns into `additional_column` (main.py:245-256).
+  /** Conform one (validated) file to the 9-column contract, extras
+    * folded into `additional_column` (main.py:245-256).
     */
-  def conform(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
-    val extras = raw.columns.filterNot(mandatoryColumns.contains)
-    val withAdd =
-      if (extras.nonEmpty)
-        raw.withColumn("additional_column",
-          concat_ws(", ", extras.map(col).toIndexedSeq: _*))
-      else
-        raw.withColumn("additional_column", lit(null).cast(StringType))
-    withAdd.select(
-      col("customer_id").cast(IntegerType),
-      col("store_id").cast(IntegerType),
-      col("product_name"),
-      col("sales_date").cast(DateType),
-      col("sales_person_id").cast(IntegerType),
-      col("price").cast(Money),
-      col("quantity").cast(IntegerType),
-      col("total_cost").cast(Money),
-      col("additional_column"))
-      // .to() aligns nullability with the declared contract (concat_ws
-      // is non-nullable; the contract column is nullable).
-      .to(factSchema)
-  }
+  def conform(spark: SparkSession, path: String): DataFrame =
+    conformed(spark, probeColumns(spark, path), Seq(path))
 
-  /** O3/S4 — the reference's literal shape: per-file conform unioned
-    * by position over an empty seed (main.py:235-258). Kept for
-    * parity; plan depth is O(files), so prefer [[multiPathRead]] when
-    * all files share a header.
+  /** O3 — the reference's conform + union (main.py:235-258), one read
+    * per distinct header in first-seen order: plan depth is O(headers),
+    * not O(files). Held equal to the per-file fold in CsvIngestSpec.
     */
   def unionFold(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val seed = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], factSchema)
-    paths.map(conform(spark, _)).foldLeft(seed)(_ union _)
+    require(paths.nonEmpty, "unionFold needs at least one path")
+    val headers = paths.map(probeColumns(spark, _))
+    headers.distinct.map(h =>
+      conformed(spark, h, paths.zip(headers).collect { case (p, `h`) => p }))
+      .reduce(_ union _)
   }
 
   /** Canonical scale form (SURVEY.md §4.3): one multi-path read for
-    * files sharing a header — one scan node, parallel file listing,
-    * no O(files) plan depth. Verified equal to [[unionFold]] in
-    * CsvIngestSpec.
+    * files sharing a header — one scan node, parallel file listing.
+    * Verified equal to [[unionFold]] in CsvIngestSpec.
     */
   def multiPathRead(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "multiPathRead needs at least one path")
-    val raw = spark.read.option("header", "true").csv(paths: _*)
-    val extras = raw.columns.filterNot(mandatoryColumns.contains)
-    val withAdd =
-      if (extras.nonEmpty)
-        raw.withColumn("additional_column",
-          concat_ws(", ", extras.map(col).toIndexedSeq: _*))
-      else raw.withColumn("additional_column", lit(null).cast(StringType))
-    withAdd.select(factSchema.fields.map(f =>
-      col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-      .to(factSchema)
+    conformed(spark, probeColumns(spark, paths.head), paths)
+  }
+
+  /** One scan of files sharing `header`; its all-string schema needs
+    * no inference job, and columns map by name whatever their order.
+    */
+  private def conformed(spark: SparkSession, header: Seq[String],
+                        paths: Seq[String]): DataFrame = {
+    val raw = spark.read.option("header", "true")
+      .schema(StructType(header.map(StructField(_, StringType))))
+      .csv(paths: _*)
+    val extras = header.filterNot(mandatoryColumns.contains)
+    // nullif(_, NULL) keeps every value but declares concat_ws's never-null
+    // output nullable, as the contract is for any header; the optimizer drops it
+    val add = if (extras.isEmpty) lit(null).cast(StringType)
+      else nullif(concat_ws(", ", extras.map(col): _*), lit(null))
+    raw.withColumn("additional_column", add)
+      .select(factSchema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
   }
 }

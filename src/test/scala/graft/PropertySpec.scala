@@ -152,21 +152,33 @@ class PropertySpec extends SparkSpec {
   test("conform yields the 9-column contract for any extra-column set") {
     import graft.ingest.CsvIngest
     val dir = tempDir("prop_conform_")
-    (1L to 3L).foreach { seed =>
-      val extras = sample(Gen.choose(0, 4).flatMap(n =>
-        Gen.listOfN(n, Gen.identifier.map("x_" + _.take(8)))), seed)
-        .distinct.filterNot(CsvIngest.mandatoryColumns.contains)
-      val header = (CsvIngest.mandatoryColumns ++ extras).mkString(",")
-      val row = Seq("1", "121", "sugar", "2023-05-05", "1", "50", "2", "100")
-        .++(extras.indices.map(i => s"v$i")).mkString(",")
+    val values = CsvIngest.mandatoryColumns.zip(
+      Seq("1", "121", "sugar", "2023-05-05", "1", "50", "2", "100")).toMap
+    // a small extras pool and three column orders, so headers recur
+    // across files and the grouped fold merges some of them
+    val files = (1L to 8L).map { seed =>
+      val extras = sample(Gen.someOf("x_pay", "x_note", "x_ref"), seed).toSeq
+      val header = new scala.util.Random(seed % 3)
+        .shuffle(CsvIngest.mandatoryColumns ++ extras)
+      def row(i: Int) = header.map(c =>
+        if (c == "customer_id") s"${seed * 10 + i}"
+        else values.getOrElse(c, s"${c}_$seed")).mkString(",")
       val p = java.nio.file.Paths.get(dir, s"f$seed.csv")
-      java.nio.file.Files.write(p, s"$header\n$row\n$row".getBytes)
+      java.nio.file.Files.write(p,
+        (header.mkString(",") +: Seq(row(0), row(1))).mkString("\n").getBytes)
       val out = CsvIngest.conform(spark, p.toString)
       assert(out.columns.toSeq == CsvIngest.factSchema.fieldNames.toSeq)
       assert(out.count() == 2)
       val add = out.select("additional_column").collect()(0).getString(0)
+      val extrasInHeader = header.filterNot(CsvIngest.mandatoryColumns.contains)
       if (extras.isEmpty) assert(add == null)
-      else assert(add == extras.indices.map(i => s"v$i").mkString(", "))
+      else assert(add == extrasInHeader.map(c => s"${c}_$seed").mkString(", "))
+      p.toString
+    }
+    (1L to 3L).foreach { seed =>
+      val mix = sample(Gen.atLeastOne(files), seed).toSeq
+      CsvIngestSpec.assertSameRows(CsvIngest.unionFold(spark, mix),
+        CsvIngestSpec.referenceFold(spark, mix))
     }
   }
 
