@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -16,41 +15,19 @@ import org.apache.spark.sql.SparkSession
   * non-comparable by construction.
   *
   * The `queries` map stays name→seconds (driver contract); the added
-  * `details`/`phases`/`failures` fields ride alongside. q14's write
-  * and read-back phases are reported separately (the write is the
-  * disk-state-sensitive half).
+  * `details`/`failures` fields ride alongside. Each query's details
+  * carry its named operator phases (GraftSession.phase) as
+  * `phases: {tag: {s, jobs}}` — e.g. q14's `q14.write`, the
+  * disk-state-sensitive half of its roundtrip.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // deployment config: graft functions injected at construction
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // local scratch writes: skip Hadoop .crc sidecars (4x faster
-      // many-small-file partitioned writes; irrelevant on HDFS/S3A)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // status-store retention (round 15): even with the UI disabled,
-      // AppStatusListener + SQLAppStatusListener retain up to 1000
-      // jobs/stages/executions in the ElementTrackingStore — and this
-      // suite's retained SQL executions carry PLAN-GRAPH strings of
-      // unrolled-DP oracles and literal-heavy scorers. Across ~600
-      // query executions the r14 sweep's heap crept 350 MB -> 1 GB of
-      // exactly such state (bench_details/r14 telemetry); old-gen
-      // pressure from it is charged to whatever query runs LATE in
-      // the sweep. Keep a debugging-sized window instead.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "25")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val phaseJobs = new GraftSession.PhaseJobs
+    spark.sparkContext.addSparkListener(phaseJobs)
     // q14 scratch: reap trees left by earlier rounds' random-suffix
     // temp dirs (the query itself now overwrites one fixed path)
     graft.io.Scratch.reapTmp()
@@ -247,20 +224,28 @@ object Bench {
       } catch { case scala.util.control.NonFatal(_) => -1.0 }
     val loadPre = loadAvg
 
+    // Named operator phases (GraftSession.phase): per run, the wall
+    // seconds and started jobs of each tag, from the tally and the
+    // listener, differenced around the run; reported as per-phase
+    // medians over the runs
+    final case class PhaseRun(s: Double, jobs: Long)
+    def phaseState = (GraftSession.phaseNanos, phaseJobs.jobs)
+    phaseJobs.sync(spark.sparkContext)
+
     final case class QRes(name: String, sec: Double, min: Double,
                           runs: Seq[Double], ok: Boolean,
-                          writeSecs: Seq[Double], gcMs: Long, heapMb: Long,
-                          rddsLeft: Int, load: Double)
+                          phases: Seq[(String, PhaseRun)], gcMs: Long,
+                          heapMb: Long, rddsLeft: Int, load: Double)
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       var ok = true
-      val writeSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val phaseRuns = scala.collection.mutable.ArrayBuffer.empty[Map[String, PhaseRun]]
       interQueryReset()
       val load0 = loadAvg
       val gc0 = gcMillis
       val runs = (1 to repeats).map { i =>
         if (i > 1) interRunReset()
-        graft.operators.Marts.lastWriteNanos.set(0L)
+        val (nanos0, jobs0) = phaseState
         val t0 = System.nanoTime()
         // noop-sink write: materializes every output column AND keeps
         // the final orderBy (a bare count() lets EliminateSorts drop
@@ -272,9 +257,15 @@ object Bench {
           System.err.println(
             s"[bench] $name run $i FAILED: ${e.getClass.getName}: ${e.getMessage}")
         }
-        val w = graft.operators.Marts.lastWriteNanos.get()
-        if (w > 0L) writeSecs += w / 1e9
-        (System.nanoTime() - t0) / 1e9
+        val sec = (System.nanoTime() - t0) / 1e9
+        phaseJobs.sync(spark.sparkContext)
+        val (nanos1, jobs1) = phaseState
+        phaseRuns += (nanos1.keySet ++ jobs1.keySet - "").map { p =>
+          p -> PhaseRun(
+            (nanos1.getOrElse(p, 0L) - nanos0.getOrElse(p, 0L)) / 1e9,
+            jobs1.getOrElse(p, 0L) - jobs0.getOrElse(p, 0L))
+        }.filter { case (_, r) => r.s > 0 || r.jobs > 0 }.toMap
+        sec
       }
       val gcMs = gcMillis - gc0
       val rt = Runtime.getRuntime
@@ -285,7 +276,12 @@ object Bench {
         f"[bench] $name%-28s med $med%7.2f s  min ${runs.min}%7.2f s" +
           f"  gc ${gcMs}%5d ms  heap ${heapMb}%6d MB  rdds $rddsLeft%3d" +
           (if (ok) "" else "  FAILED"))
-      QRes(name, med, runs.min, runs, ok, writeSecs.toSeq, gcMs, heapMb,
+      val phases = phaseRuns.flatMap(_.keys).distinct.sorted.map { p =>
+        val rs = phaseRuns.map(_.getOrElse(p, PhaseRun(0.0, 0L)))
+        p -> PhaseRun(median(rs.map(_.s).toSeq),
+          median(rs.map(_.jobs.toDouble).toSeq).round)
+      }.toSeq
+      QRes(name, med, runs.min, runs, ok, phases, gcMs, heapMb,
         rddsLeft, load0)
     }
     val loadPost = loadAvg
@@ -300,13 +296,11 @@ object Bench {
       s""""${r.name}":{"median":${jd(r.sec)},"min":${jd(r.min)},""" +
         s""""runs":[${r.runs.map(jd).mkString(",")}],"ok":${r.ok},""" +
         s""""gc_ms":${r.gcMs},"heap_mb":${r.heapMb},"rdds":${r.rddsLeft},""" +
-        s""""load":${jd(r.load)}}"""
+        s""""load":${jd(r.load)},"phases":""" +
+        r.phases.map { case (p, pr) =>
+          s""""$p":{"s":${jd(pr.s)},"jobs":${pr.jobs}}"""
+        }.mkString("{", ",", "}") + "}"
     }.mkString("{", ",", "}")
-    val phases = results.find(r => r.name.startsWith("q14") && r.writeSecs.nonEmpty)
-      .map { r =>
-        val w = median(r.writeSecs)
-        s""""q14_write":${jd(w)},"q14_read":${jd(math.max(0.0, r.sec - w))}"""
-      }.getOrElse("")
     val failures = results.filterNot(_.ok).map(r => s""""${r.name}"""")
       .mkString("[", ",", "]")
     val allOk = results.forall(_.ok)
@@ -317,7 +311,7 @@ object Bench {
     val prebuilds = prebuildSecs
       .map { case (l, s) => s""""$l":${jd(s)}""" }.mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec"""" +
-      s""","queries":$qs,"details":$details,"phases":{$phases}""" +
+      s""","queries":$qs,"details":$details""" +
       s""","prebuilds":$prebuilds""" +
       s""","load":{"pre":${jd(loadPre)},"post":${jd(loadPost)}}""" +
       s""","failures":$failures,"ok":$allOk,"runs":$repeats,"sf":"$sfDir"}"""

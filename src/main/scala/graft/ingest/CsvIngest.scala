@@ -94,17 +94,12 @@ object CsvIngest {
       .reduce(_ union _)
   }
 
-  /** Canonical scale form (SURVEY.md §4.3): one multi-path read for
-    * files sharing a header — one scan node, parallel file listing.
-    * Verified equal to [[unionFold]] in CsvIngestSpec.
-    */
-  def multiPathRead(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    require(paths.nonEmpty, "multiPathRead needs at least one path")
-    conformed(spark, probeColumns(spark, paths.head), paths)
-  }
-
   /** One scan of files sharing `header`; its all-string schema needs
-    * no inference job, and columns map by name whatever their order.
+    * no inference job. Spark CSV applies a user schema by POSITION
+    * (`enforceSchema` defaults to true), so rows land in the right
+    * columns only because every path here has exactly this header:
+    * [[unionFold]]'s grouping by identical header is what makes a
+    * permuted or extra-column file conform correctly.
     */
   private def conformed(spark: SparkSession, header: Seq[String],
                         paths: Seq[String]): DataFrame = {

@@ -24,8 +24,8 @@ object Writers {
     * merge is one cheap rename per directory (measured faster than
     * v2's per-file task-side moves on local FS; on S3A prefer the
     * magic committer instead). The other many-small-files cost
-    * locally is Hadoop CRC sidecars — disabled in the bench/verify
-    * sessions via RawLocalFileSystem.
+    * locally is Hadoop CRC sidecars — disabled in every
+    * `GraftSession.local` session (`NoChecksumLocalFileSystem`).
     */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],
@@ -38,7 +38,7 @@ object Writers {
     // writer task count pinned. Default = cluster parallelism (tasks
     // spread across machines, each with its own IO path). numTasks
     // overrides it when all writers share one storage endpoint: the
-    // WriteProbe measurement (BASELINE.md) shows a single local disk
+    // writer sweep recorded in BASELINE.md shows a single local disk
     // saturates at ~8 concurrent parquet writers (4.3 s vs 5.9-6.4 s
     // at 32 tasks for 2100 dirs) — contention, not CPU, is the floor.
     val n = if (numTasks > 0) numTasks

@@ -76,85 +76,99 @@ object Curation {
     * re-deriving every upstream stage per consumer: the lazy first
     * cut re-ran the quality window + component loop inside the flag
     * joins, 152 parquet scans in one plan), and the 19-row report is
-    * checkpointed so the pool can be released before returning.
+    * checkpointed so the pool can be released before returning. Each
+    * stage runs as the `curation.<stage>` phase.
     */
   def pipelineReportOn(docs: DataFrame, target: Long): DataFrame = {
+    val s = docs.sparkSession
+    def stage[A](name: String)(body: => A): A =
+      graft.GraftSession.phase(s, s"curation.$name")(body)
     val pool = docs.filter(col("source") =!= "src0")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // 1. quality gate — per-doc verdicts, keep the `kept` conjunction
-      val keptIds = TrainingOps.curationVerdictOn(pool)
-        .filter(col("kept")).select("doc_id").localCheckpoint()
+      val keptIds = stage("quality") {
+        TrainingOps.curationVerdictOn(pool)
+          .filter(col("kept")).select("doc_id").localCheckpoint()
+      }
       val keptDocs = pool.join(broadcast(keptIds), "doc_id")
 
       // 2. near-dup components over the kept docs, keep-longest rep
-      val pairs = Dedup.minhashNearDups(keptDocs, "doc_id", "text",
-        threshold = 0.9)
-      val labels = Dedup.dupClusters(keptDocs, pairs, "doc_id")
-        .select(col("id").as("doc_id"), col("cluster"))
-      val repIds = TrainingOps.representativesOn(labels,
-          keptDocs.select("doc_id", "n_chars"))
-        .filter(col("is_rep")).select("doc_id").localCheckpoint()
+      val repIds = stage("dedup") {
+        val pairs = Dedup.minhashNearDups(keptDocs, "doc_id", "text",
+          threshold = 0.9)
+        val labels = Dedup.dupClusters(keptDocs, pairs, "doc_id")
+          .select(col("id").as("doc_id"), col("cluster"))
+        TrainingOps.representativesOn(labels,
+            keptDocs.select("doc_id", "n_chars"))
+          .filter(col("is_rep")).select("doc_id").localCheckpoint()
+      }
 
       // 3. decontaminate the reps against the src0 benchmark 5-grams
-      val benchGrams = Dedup.wordGrams(
-          docs.filter(col("source") === "src0"), "doc_id", "text", k = 5)
-        .select("g").distinct()
-      val repDocs = pool.join(broadcast(repIds), "doc_id")
-      val contaminated = Dedup.wordGrams(repDocs, "doc_id", "text", k = 5)
-        .join(broadcast(benchGrams), "g")
-        .select("doc_id").distinct()
-      val cleanIds = repDocs.join(contaminated, Seq("doc_id"), "left_anti")
-        .select("doc_id").localCheckpoint()
+      val cleanIds = stage("decontaminate") {
+        val benchGrams = Dedup.wordGrams(
+            docs.filter(col("source") === "src0"), "doc_id", "text", k = 5)
+          .select("g").distinct()
+        val repDocs = pool.join(broadcast(repIds), "doc_id")
+        val contaminated = Dedup.wordGrams(repDocs, "doc_id", "text", k = 5)
+          .join(broadcast(benchGrams), "g")
+          .select("doc_id").distinct()
+        repDocs.join(contaminated, Seq("doc_id"), "left_anti")
+          .select("doc_id").localCheckpoint()
+      }
 
       // 4. temperature-scaled language mixture over the clean survivors
-      val sampledIds = TrainingOps.temperatureSample(
-          pool.join(broadcast(cleanIds), "doc_id"), "lang", target)
-        .select("doc_id").localCheckpoint()
+      val sampledIds = stage("sample") {
+        TrainingOps.temperatureSample(
+            pool.join(broadcast(cleanIds), "doc_id"), "lang", target)
+          .select("doc_id").localCheckpoint()
+      }
 
       // 5. per-source data card + per-stage survivor counts. One flag
       // frame, one groupBy(source); card fields condition on `sampled`
       // so the report describes what the pipeline SHIPS.
-      val flags = pool
-        .join(broadcast(keptIds.withColumn("_kept", lit(1))),
-          Seq("doc_id"), "left")
-        .join(broadcast(repIds.withColumn("_rep", lit(1))),
-          Seq("doc_id"), "left")
-        .join(broadcast(cleanIds.withColumn("_clean", lit(1))),
-          Seq("doc_id"), "left")
-        .join(broadcast(sampledIds.withColumn("_samp", lit(1))),
-          Seq("doc_id"), "left")
-      val agg = flags.groupBy("source").agg(
-        count(lit(1)).as("n_input"),
-        sum(when(col("_kept").isNotNull, 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("_rep").isNotNull, 1L).otherwise(0L)).as("n_reps"),
-        sum(when(col("_clean").isNotNull, 1L).otherwise(0L)).as("n_clean"),
-        sum(when(col("_samp").isNotNull, 1L).otherwise(0L)).as("n_sampled"),
-        sum(when(col("_samp").isNotNull,
-          TextFns.tokenCount(col("text")).cast("long")).otherwise(0L))
-          .as("total_tokens"),
-        countDistinct(when(col("_samp").isNotNull, col("lang")))
-          .as("n_langs"),
-        sum(when(col("_samp").isNotNull, col("n_chars"))).as("_chars"))
-      // majority language of the SAMPLED slice per source (count desc,
-      // lexicographic tie-break — qd43's convention); NULL when a
-      // source ships nothing
-      val wl = Window.partitionBy("source")
-        .orderBy(col("cnt").desc, col("lang"))
-      val top = flags.filter(col("_samp").isNotNull)
-        .groupBy("source", "lang").agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(wl))
-        .filter(col("rn") === 1)
-        .select(col("source"), col("lang").as("top_lang"))
-      agg.join(top, Seq("source"), "left")
-        .select(col("source"), col("n_input"), col("n_kept"),
-          col("n_reps"), col("n_clean"), col("n_sampled"),
-          col("total_tokens"), col("n_langs"), col("top_lang"),
-          when(col("n_sampled") > 0,
-            col("_chars").cast("double") / col("n_sampled").cast("double"))
-            .as("avg_chars"))
-        .localCheckpoint()
-        .orderBy("source")
+      stage("report") {
+        val flags = pool
+          .join(broadcast(keptIds.withColumn("_kept", lit(1))),
+            Seq("doc_id"), "left")
+          .join(broadcast(repIds.withColumn("_rep", lit(1))),
+            Seq("doc_id"), "left")
+          .join(broadcast(cleanIds.withColumn("_clean", lit(1))),
+            Seq("doc_id"), "left")
+          .join(broadcast(sampledIds.withColumn("_samp", lit(1))),
+            Seq("doc_id"), "left")
+        val agg = flags.groupBy("source").agg(
+          count(lit(1)).as("n_input"),
+          sum(when(col("_kept").isNotNull, 1L).otherwise(0L)).as("n_kept"),
+          sum(when(col("_rep").isNotNull, 1L).otherwise(0L)).as("n_reps"),
+          sum(when(col("_clean").isNotNull, 1L).otherwise(0L)).as("n_clean"),
+          sum(when(col("_samp").isNotNull, 1L).otherwise(0L)).as("n_sampled"),
+          sum(when(col("_samp").isNotNull,
+            TextFns.tokenCount(col("text")).cast("long")).otherwise(0L))
+            .as("total_tokens"),
+          countDistinct(when(col("_samp").isNotNull, col("lang")))
+            .as("n_langs"),
+          sum(when(col("_samp").isNotNull, col("n_chars"))).as("_chars"))
+        // majority language of the SAMPLED slice per source (count desc,
+        // lexicographic tie-break — qd43's convention); NULL when a
+        // source ships nothing
+        val wl = Window.partitionBy("source")
+          .orderBy(col("cnt").desc, col("lang"))
+        val top = flags.filter(col("_samp").isNotNull)
+          .groupBy("source", "lang").agg(count(lit(1)).as("cnt"))
+          .withColumn("rn", row_number().over(wl))
+          .filter(col("rn") === 1)
+          .select(col("source"), col("lang").as("top_lang"))
+        agg.join(top, Seq("source"), "left")
+          .select(col("source"), col("n_input"), col("n_kept"),
+            col("n_reps"), col("n_clean"), col("n_sampled"),
+            col("total_tokens"), col("n_langs"), col("top_lang"),
+            when(col("n_sampled") > 0,
+              col("_chars").cast("double") / col("n_sampled").cast("double"))
+              .as("avg_chars"))
+          .localCheckpoint()
+          .orderBy("source")
+      }
     } finally pool.unpersist(blocking = false)
   }
 }

@@ -429,7 +429,7 @@ object Dedup {
     // Pair-sized — eager checkpoint, the usual small-result move.
     // (Round 18, measured and kept: merging the checkpoint job with
     // the guard's count() via persist+count ran SLOWER per batch —
-    // 0.55-0.64 s vs 0.43-0.47 s in ComposedProbe — the columnar
+    // 0.55-0.64 s vs 0.43-0.47 s, OPTIMIZATION_r18.md — the columnar
     // cache build on a flat pair grain costs more than the saved job
     // barrier, the round-11 flat-grain rule. The checkpoint stays.)
     // Batch-derived sides carry EXPLICIT broadcast hints (round 17,
@@ -532,12 +532,20 @@ object Dedup {
                            threshold: Double,
                            maxBucket: Int = 64): DataFrame = {
     val batchDocs = docs.where(!isCorpus)
-    val batchSh = shingleFrame(batchDocs, "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // TWO consumers of the batch band frame (cross join + batch
-    // banding) — materialize it once; it is batch-sized (8 rows/doc)
-    val batchBands = bandFrame(batchSh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // TWO consumers each of the batch shingle frame (banding + exact
+    // verify) and the batch band frame (cross join + batch banding) —
+    // materialize both once, as the `refresh.shingles` phase; they are
+    // batch-sized (8 band rows/doc). The `refresh.edges` and
+    // `refresh.components` phases follow in [[refreshLabelsOn]].
+    val (batchSh, batchBands) =
+      graft.GraftSession.phase(docs.sparkSession, "refresh.shingles") {
+        val sh = shingleFrame(batchDocs, "doc_id", "text")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val bands = bandFrame(sh)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        bands.count()
+        (sh, bands)
+      }
     // batch↔corpus candidates: equi-join the batch bands against the
     // STANDING index — the corpus never re-minhashes
     val cross = batchBands
@@ -585,15 +593,18 @@ object Dedup {
     // reference re-runs the entire upstream banding + jaccard-verify
     // pipeline (measured ~1 s × 4 at sf0.1). The frame is batch-scale
     // tiny, so eager materialization costs one small job.
-    val cEdges = edges
-      .join(standing.select(col("doc_id").as("doc_a"),
-        col("cluster").as("na")), Seq("doc_a"), "left")
-      .join(standing.select(col("doc_id").as("doc_b"),
-        col("cluster").as("nb")), Seq("doc_b"), "left")
-      .select(coalesce(col("na"), col("doc_a")).as("doc_a"),
-        coalesce(col("nb"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .localCheckpoint()
+    val s = edges.sparkSession
+    val cEdges = graft.GraftSession.phase(s, "refresh.edges") {
+      edges
+        .join(standing.select(col("doc_id").as("doc_a"),
+          col("cluster").as("na")), Seq("doc_a"), "left")
+        .join(standing.select(col("doc_id").as("doc_b"),
+          col("cluster").as("nb")), Seq("doc_b"), "left")
+        .select(coalesce(col("na"), col("doc_a")).as("doc_a"),
+          coalesce(col("nb"), col("doc_b")).as("doc_b"))
+        .filter(col("doc_a") =!= col("doc_b"))
+        .localCheckpoint()
+    }
     // nodes: every batch doc (so batch singletons self-label) plus
     // every TOUCHED standing cluster (untouched clusters never enter
     // the component computation at all — the scale win)
@@ -607,8 +618,9 @@ object Dedup {
     // in diameter+1 driver-synchronized rounds, and at the contracted
     // graph's size the ROUND COUNT is the entire cost (measured: the
     // star variant's extra rounds doubled qd54's components phase)
-    val comp = dupClusters(nodes, cEdges, "id")
-      .withColumnRenamed("cluster", "cluster_new")
+    val comp = graft.GraftSession.phase(s, "refresh.components") {
+      dupClusters(nodes, cEdges, "id")
+    }.withColumnRenamed("cluster", "cluster_new")
     // comp is itself checkpointed (lineage truncated), so the
     // contracted edges have no remaining consumer — release their
     // blocks NOW instead of leaving them for ContextCleaner

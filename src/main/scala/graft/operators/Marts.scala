@@ -16,12 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Marts {
 
-  /** Duration of the most recent q14 partitioned write in this JVM —
-    * Bench-only introspection so the disk-state-sensitive write phase
-    * can be reported separately from the read-back (VERDICT r4 #3).
-    */
-  val lastWriteNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** q13 — customer mart over the star schema: per-customer monthly
     * totals enriched with customer attributes (full_name concat X2,
     * month key X4, decimal money §7.4).
@@ -58,13 +52,14 @@ object Marts {
     // files — the small-files problem at scale). With it, each
     // directory gets one file.
     // numTasks=8: this roundtrip writes to the node-local disk, where
-    // the WriteProbe measurement found ~8 concurrent writers is the
-    // contention sweet spot (see Writers.writePartitioned doc); a
-    // distributed FS target would leave the default.
-    val t0 = System.nanoTime()
-    graft.io.Writers.writePartitioned(mart, out, Seq("month", "store"),
-      numTasks = 8)
-    lastWriteNanos.set(System.nanoTime() - t0)
+    // the writer sweep recorded in BASELINE.md found ~8 concurrent
+    // writers is the contention sweet spot (see Writers.writePartitioned
+    // doc); a distributed FS target would leave the default.
+    // `q14.write` splits the disk-state-sensitive write from the read-back.
+    graft.GraftSession.phase(s, "q14.write") {
+      graft.io.Writers.writePartitioned(mart, out, Seq("month", "store"),
+        numTasks = 8)
+    }
     s.read.parquet(out)
       .select(col("store").cast("int").as("store"), col("person"),
         col("month"), col("total"), col("incentive"))

@@ -444,6 +444,10 @@ object Admission {
       // sink job is a three-way join of batch-grain checkpoints.
       // Results are identical by construction: the same three leg
       // frames meet the same assembly, only the job schedule moved.
+      // Phases `composed.{mhLeg,edLeg,vecLeg,sink}`: the side legs tag
+      // themselves inside their Future bodies, on the leg threads.
+      def leg[A](name: String)(body: => A): A =
+        graft.GraftSession.phase(s, s"composed.$name")(body)
       val legPool = java.util.concurrent.Executors.newFixedThreadPool(2)
       val legEc = scala.concurrent.ExecutionContext.fromExecutorService(legPool)
       val q = stream.writeStream
@@ -452,13 +456,13 @@ object Admission {
           val d = df.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val edF = scala.concurrent.Future {
+            val edF = scala.concurrent.Future(leg("edLeg") {
               EditJoin.editAdmission(corpus, windex, csigs, d,
                   "doc_id", "text")
                 .select(col("doc_id"), col("is_dup").as("edit_dup"))
                 .localCheckpoint()
-            }(legEc)
-            val vecF = scala.concurrent.Future {
+            })(legEc)
+            val vecF = scala.concurrent.Future(leg("vecLeg") {
               val arrivals = emb
                 .join(d.select(col("doc_id").as("vec_id")), "vec_id")
                 .select(col("vec_id").as("query_id"),
@@ -470,9 +474,11 @@ object Admission {
                 .groupBy("query_id").agg(max("sim").as("vec_top_sim"))
                 .withColumnRenamed("query_id", "doc_id")
                 .localCheckpoint()
-            }(legEc)
-            val mh = Dedup.admitAgainst(corpus, bands, d, threshold = 0.9)
-              .select(col("doc_id"), col("is_dup").as("minhash_dup"))
+            })(legEc)
+            val mh = leg("mhLeg") {
+              Dedup.admitAgainst(corpus, bands, d, threshold = 0.9)
+                .select(col("doc_id"), col("is_dup").as("minhash_dup"))
+            }
             val ed = scala.concurrent.Await.result(
               edF, scala.concurrent.duration.Duration.Inf)
             val vecTop = scala.concurrent.Await.result(
@@ -482,13 +488,15 @@ object Admission {
               // semantic leg coalesces to false (mirrored in the oracle)
               val semantic = coalesce(
                 col("vec_top_sim") >= VecNeighborThreshold, lit(false))
-              mh.join(ed, "doc_id")
-                .join(vecTop, Seq("doc_id"), "left")
-                .select(col("doc_id"), col("minhash_dup"), col("edit_dup"),
-                  semantic.as("vec_neighbor"), col("vec_top_sim"),
-                  (!(col("minhash_dup") || col("edit_dup") || semantic))
-                    .as("admit"))
-                .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
+              leg("sink") {
+                mh.join(ed, "doc_id")
+                  .join(vecTop, Seq("doc_id"), "left")
+                  .select(col("doc_id"), col("minhash_dup"), col("edit_dup"),
+                    semantic.as("vec_neighbor"), col("vec_top_sim"),
+                    (!(col("minhash_dup") || col("edit_dup") || semantic))
+                      .as("admit"))
+                  .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
+              }
             } finally {
               // batch-grain checkpoint blocks, released once the sink
               // job has consumed them (the minhashNearDups lifecycle)

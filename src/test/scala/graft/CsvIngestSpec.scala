@@ -3,13 +3,10 @@ package graft
 import graft.ingest.CsvIngest
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 object CsvIngestSpec {
 
@@ -81,13 +78,11 @@ class CsvIngestSpec extends SparkSpec {
     assert(bad.count() == 0)
   }
 
-  test("union fold over empty seed equals multi-path read (Q15)") {
+  test("union fold of one header group equals the empty-seed reference fold (Q15)") {
     val f1b = Fixtures.writeF1(dir, name = "f1b_sales.csv", seed = 99L)
     val folded = CsvIngest.unionFold(spark, Seq(f1, f1b))
-    val multi = CsvIngest.multiPathRead(spark, Seq(f1, f1b))
     assert(folded.count() == 1000)
-    assert(folded.exceptAll(multi).count() == 0)
-    assert(multi.exceptAll(folded).count() == 0)
+    assertSameRows(folded, referenceFold(spark, Seq(f1, f1b)))
   }
 
   test("union fold mixes heterogeneous headers (F1 + F2)") {
@@ -125,31 +120,6 @@ class CsvIngestSpec extends SparkSpec {
     }
     val (_, bad) = CsvIngest.triage(spark, Seq(cases.last._2))
     assert(bad == Seq((cases.last._2, CsvIngest.mandatoryColumns.toSet)))
-  }
-
-  /** Spark jobs started on this thread while `body` runs. A flush job
-    * submitted afterwards is awaited on the listener: listener events
-    * arrive in order, so once it is seen every earlier job start is in.
-    */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val key = "graft.spec.jobTag"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      val out = try body finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("flush") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("flush"), "listener never saw the flush job")
-      (out, seen.asScala.count(_ == "body"))
-    } finally sc.removeSparkListener(listener)
   }
 
   test("triage and union fold construction start no Spark job") {

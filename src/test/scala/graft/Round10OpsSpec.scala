@@ -102,10 +102,6 @@ class Round10OpsSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(newLeaf.toPath, oldLeaf.toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // the overwritten bytes no longer match the Hadoop .crc sidecar;
-    // drop it (the checksum FS treats a missing sidecar as ok)
-    new java.io.File(oldLeaf.getParentFile,
-      "." + oldLeaf.getName + ".crc").delete()
     assert(art().collect()(0).getLong(0) == 12L,
       "nested leaf rewrite must invalidate the artifact")
     assert(builds == 2)
